@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * Layout: one external parquet table per sub-store
   * (`vectors`/`edges`/`asg`/`deletes`), PARTITIONED BY `__landing`
   * (dynamic overwrite per tick — replaying a landing replaces exactly
-  * its partition, the SketchStore idempotency contract) and CLUSTERED
+  * its partition, the SketchStore idempotency contract; the mode is a
+  * TABLE option, `partitionOverwriteMode = dynamic` in the table's
+  * storage properties, so no session conf is read or set) and CLUSTERED
   * BY the row key (`vec_id`, `src`) into [[Buckets]] buckets. The
   * bucketed scan reports its hash distribution to Catalyst, so the
   * merged-view reads that serve the index — latest-landing-per-src
@@ -32,9 +34,7 @@ import org.apache.spark.sql.functions._
   * FILES are the durable artifact. A fresh session re-registers the
   * table over the existing files (`CREATE TABLE … LOCATION` + partition
   * recovery) — bucketed file names carry their bucket id, so the spec
-  * survives re-registration. A legacy (pre-bucketing) store is
-  * detected by its file names and served as a plain parquet read —
-  * correct, just without the co-location. */
+  * survives re-registration; the table option comes back with it. */
 object AnnStore {
 
   /** Bucket count for every ANN sub-store (equal across stores — a
@@ -51,65 +51,24 @@ object AnnStore {
 
   private def subPath(storePath: String, sub: String) = s"$storePath/$sub"
 
-  private def fs(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def hasLandings(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val f = fs(spark, p)
-    f.exists(hp) && f.listStatus(hp).exists(_.getPath.getName.startsWith("__landing="))
-  }
-
-  /** Run `body` with dynamic partition overwrite on, restoring the
-    * prior session value after (insertInto reads the SESSION conf, not
-    * writer options — a writer-level option is silently ignored and
-    * static overwrite would wipe the whole table). */
-  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** True when the landed files carry bucket ids in their names
-    * (`part-NNNNN-uuid_BBBBB.c000…`) — the marker Spark itself uses to
-    * map a file to its bucket, so it is exactly the "safe to declare
-    * CLUSTERED BY over these files" test. */
-  private def filesAreBucketed(spark: SparkSession, p: String): Boolean = {
-    val f = fs(spark, p)
-    val root = new org.apache.hadoop.fs.Path(p)
-    val part = f.listStatus(root)
-      .find(_.getPath.getName.startsWith("__landing="))
-    part.exists { d =>
-      f.listStatus(d.getPath).exists { st =>
-        val nm = st.getPath.getName
-        nm.startsWith("part-") && nm.matches(""".*_\d{5}\.c000.*""")
-      }
-    }
-  }
+  private def hasLandings(spark: SparkSession, p: String): Boolean =
+    PartitionDirs.list(spark, p, "__landing").nonEmpty
 
   /** Register the catalog table over existing landed files (fresh
-    * session reading a durable store). Returns false when the files
-    * predate bucketing — the caller falls back to a plain path read. */
+    * session reading a durable store). */
   private def registerOverFiles(spark: SparkSession, storePath: String,
-                                sub: String, bucketCol: String): Boolean = {
+                                sub: String, bucketCol: String): Unit = {
     val p = subPath(storePath, sub)
-    if (!filesAreBucketed(spark, p)) return false
     val t = tableName(storePath, sub)
     val dataSchema = org.apache.spark.sql.types.StructType(
       spark.read.parquet(p).schema.filterNot(_.name == "__landing"))
     val cols = dataSchema.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
     spark.sql(s"""CREATE TABLE $t ($cols, `__landing` BIGINT)
-      |USING parquet PARTITIONED BY (__landing)
+      |USING parquet OPTIONS ('partitionOverwriteMode' = 'dynamic')
+      |PARTITIONED BY (__landing)
       |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $Buckets BUCKETS
       |LOCATION '$p'""".stripMargin)
     spark.sql(s"MSCK REPAIR TABLE $t")
-    true
   }
 
   /** Land one landing of `df` into the `sub` store, bucketed by
@@ -119,51 +78,26 @@ object AnnStore {
     val t = tableName(storePath, sub)
     val p = subPath(storePath, sub)
     val out = df.withColumn("__landing", lit(landingId))
-    val inCatalog = spark.catalog.tableExists(t)
-    if (!inCatalog && hasLandings(spark, p) &&
-        !registerOverFiles(spark, storePath, sub, bucketCol)) {
-      // legacy (non-bucketed) files under this path: refuse to mix —
-      // a bucketed table over unbucketed files mis-routes reads
-      throw new IllegalStateException(
-        s"store $p holds pre-bucketing landings; rebuild the store " +
-          "(AnnStore cannot append bucketed landings to legacy files)")
-    }
-    if (!spark.catalog.tableExists(t) || !hasLandings(spark, p)) {
-      // fresh store — or a stale catalog entry whose files are gone (a
-      // dropped temp store, or a crash before the first files landed):
-      // (re)create table + files in one bucketed write
+    if (!hasLandings(spark, p)) {
+      // fresh store — or one with no landing left (a compaction dropped
+      // them all, leaving only the commit marker), or a stale catalog
+      // entry whose files are gone: (re)create table + files in one
+      // bucketed write. Overwrite mode, because the directory may still
+      // hold that marker; dynamic, so it replaces only this landing.
       spark.sql(s"DROP TABLE IF EXISTS $t")
       out.write
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__landing")
         .bucketBy(Buckets, bucketCol).sortBy(bucketCol)
         .option("path", p)
         .saveAsTable(t)
     } else {
+      if (!spark.catalog.tableExists(t)) registerOverFiles(spark, storePath, sub, bucketCol)
       val order = spark.table(t).schema.fieldNames
-      // the conf must be set on the session that EXECUTES the write —
-      // inside foreachBatch the batch frame belongs to a cloned
-      // micro-batch session whose conf the outer session's set() never
-      // reaches (static mode there would wipe every prior landing)
-      withDynamicOverwrite(out.sparkSession) {
-        out.select(order.map(col): _*).write.mode("overwrite").insertInto(t)
-      }
+      out.select(order.map(col): _*).write.mode("overwrite").insertInto(t)
     }
     spark.catalog.refreshTable(t)
-  }
-
-  /** Run `body` while PINNING dynamic partition overwrite on every
-    * session in `sessions` — the guard that makes CONCURRENT [[land]]
-    * calls safe: each land's own [[withDynamicOverwrite]] then reads
-    * AND restores "dynamic" under every interleaving, so no write can
-    * observe the static mode mid-flight (a static insertInto would
-    * wipe every prior landing). Without this pin, two overlapping
-    * lands race their conf restores. */
-  private[graft] def landScope[T](sessions: Seq[SparkSession])(body: => T): T = {
-    def nest(rest: List[SparkSession]): T = rest match {
-      case Nil => body
-      case s :: tail => withDynamicOverwrite(s)(nest(tail))
-    }
-    nest(sessions.distinct.toList)
   }
 
   /** Land several sub-stores of ONE landing concurrently (guide §2.6:
@@ -176,36 +110,30 @@ object AnnStore {
   def landMany(spark: SparkSession, storePath: String, landingId: Long,
                lands: Seq[(String, DataFrame, String)]): Unit = {
     if (lands.isEmpty) return
-    if (lands.size == 1) {
-      val (sub, df, bc) = lands.head
-      land(spark, storePath, sub, df, landingId, bc)
-      return
-    }
-    landScope(spark +: lands.map(_._2.sparkSession)) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(lands.size)
-      try {
-        val futs = lands.map { case (sub, df, bc) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit =
-              land(spark, storePath, sub, df, landingId, bc)
-          })
-        }
-        futs.foreach(_.get()) // propagate the first failure
-      } finally { pool.shutdown(); () }
-    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(lands.size)
+    try {
+      val futs = lands.map { case (sub, df, bc) =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit = land(spark, storePath, sub, df, landingId, bc)
+        })
+      }
+      futs.foreach(_.get()) // propagate the first failure
+    } finally { pool.shutdown(); () }
   }
 
   /** The `sub` store as a DataFrame whose scan reports the bucketed
-    * distribution. Falls back to a plain parquet read for a legacy
-    * store. Throws when the store is absent (same contract as the old
-    * direct path read). */
+    * distribution. Throws when the store is absent — e.g. an index whose
+    * first tick crashed between its landings. */
   def read(spark: SparkSession, storePath: String, sub: String,
            bucketCol: String): DataFrame = {
     val t = tableName(storePath, sub)
-    if (spark.catalog.tableExists(t)) spark.table(t)
-    else if (hasLandings(spark, subPath(storePath, sub)) &&
-             registerOverFiles(spark, storePath, sub, bucketCol)) spark.table(t)
-    else spark.read.parquet(subPath(storePath, sub))
+    if (!spark.catalog.tableExists(t)) {
+      val p = subPath(storePath, sub)
+      require(hasLandings(spark, p), s"ANN store $p holds no landing — " +
+        "if a tick crashed before landing it, re-run that tick")
+      registerOverFiles(spark, storePath, sub, bucketCol)
+    }
+    spark.table(t)
   }
 
   /** [[read]] that tolerates a missing/empty store: None. */
@@ -219,22 +147,12 @@ object AnnStore {
   def dropLandings(spark: SparkSession, storePath: String, sub: String,
                    before: Long): Unit = {
     val t = tableName(storePath, sub)
-    val p = subPath(storePath, sub)
-    val dir = new org.apache.hadoop.fs.Path(p)
-    val f = fs(spark, p)
-    if (!f.exists(dir)) return
-    f.listStatus(dir).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("__landing=") &&
-          nm.stripPrefix("__landing=").toLong < before) {
-        if (spark.catalog.tableExists(t)) {
-          spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION " +
-            s"(__landing=${nm.stripPrefix("__landing=")})")
-        }
-        f.delete(st.getPath, true); ()
-      }
+    val dropped = PartitionDirs.drop(spark, subPath(storePath, sub), "__landing")(_.toLong < before)
+    if (spark.catalog.tableExists(t)) {
+      dropped.foreach(id =>
+        spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (__landing=$id)"))
+      spark.catalog.refreshTable(t)
     }
-    if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
   }
 
   /** Drop the catalog entries for a store (the files' owner deletes

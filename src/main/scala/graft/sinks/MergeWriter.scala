@@ -60,9 +60,9 @@ object MergeWriter {
     * prunes the SCAN but still builds the full file index first, an
     * O(all partitions) driver listing (and, past the parallel-listing
     * threshold, a whole Spark job) that at 100 TB dwarfs a small
-    * delta's actual read. Listing here is one `listStatus` of the root
-    * (to resolve escaped dir names) plus the impacted dirs — O(dirs),
-    * no file index over untouched partitions. The round-14 p05tick
+    * delta's actual read. Listing here is [[PartitionDirs.list]] — one
+    * `listStatus` of the root — plus the impacted dirs: O(dirs), no
+    * file index over untouched partitions. The round-14 p05tick
     * probe caught the difference: a fixed-delta tick grew 3.7× with a
     * ×10 store through the full index, flat through this.
     *
@@ -70,16 +70,9 @@ object MergeWriter {
     * is missing) — callers substitute an empty frame. */
   def prunedRead(spark: SparkSession, path: String, partitionCol: String,
                  values: Seq[Any]): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    val wanted = values.map(v =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(String.valueOf(v))).toSet
-    val dirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(partitionCol + "="))
-      .filter(st => wanted.contains(st.getPath.getName.drop(partitionCol.length + 1)))
-      .map(_.getPath.toString)
+    val wanted = values.map(String.valueOf).toSet
+    val dirs = PartitionDirs.list(spark, path, partitionCol)
+      .filter(d => wanted(d.value)).map(_.path.toString)
     if (dirs.isEmpty) None
     else Some(spark.read.option("basePath", path).parquet(dirs.toIndexedSeq: _*))
   }
@@ -106,24 +99,15 @@ object MergeWriter {
               onlyValues: Option[Seq[Any]] = None): Seq[Any] = {
     // driver-side listing is bounded by partition/file count, not rows —
     // same budget as merge()'s impacted-partition list
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Seq.empty
-    val wanted = onlyValues.map(_.map(v =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(String.valueOf(v))).toSet)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      .filter(s => wanted.forall(_.contains(
-        s.getPath.getName.drop(partitionCol.length + 1))))
-    val fragmented = parts.flatMap { p =>
-      val files = fs.listStatus(p.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-      if (files.length <= maxFiles) None
-      else Some((
-        // directory names percent-encode special chars (e.g. "BTC/USDT")
-        java.net.URLDecoder.decode(p.getPath.getName.drop(partitionCol.length + 1), "UTF-8"),
-        math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)))
-    }.toSeq
+    val wanted = onlyValues.map(_.map(String.valueOf).toSet)
+    val fragmented = PartitionDirs.list(spark, path, partitionCol)
+      .filter(d => wanted.forall(_(d.value)))
+      .flatMap { d =>
+        val files = d.files.filter(_.getPath.getName.endsWith(".parquet"))
+        if (files.length <= maxFiles) None
+        else Some((d.value,
+          math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)))
+      }
     fragmented.foreach { case (value, nFiles) =>
       // prunedRead: the rewrite's scan must not re-file-index the whole
       // store any more than the listing above does
@@ -138,9 +122,5 @@ object MergeWriter {
       } finally graft.Checkpoints.free(out)
     }
     fragmented.map(_._1)
-  }
-
-  private implicit class ColOps(private val c: org.apache.spark.sql.Column) extends AnyVal {
-    def isInStr(vals: Array[Any]): org.apache.spark.sql.Column = c.isin(vals.toIndexedSeq: _*)
   }
 }

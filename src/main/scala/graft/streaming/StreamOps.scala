@@ -1342,24 +1342,6 @@ object StreamOps {
       |  JOIN ex ON ex.event_type = kept.event_type
       |ORDER BY kept.event_type, kept.h""".stripMargin
 
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** A landing store read that tolerates an EMPTY directory (a
-    * compaction may drop every partition of the deletes store while
-    * the dir itself remains): None when the path is missing or holds
-    * no landing partition. */
-  private def readStore(spark: SparkSession, p: String): Option[DataFrame] = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) None
-    else if (!fs.listStatus(hp).exists(_.getPath.getName.startsWith("__landing=")))
-      None
-    else Some(spark.read.parquet(p))
-  }
-
   /** Landing ids from the store's PARTITION DIRECTORY names — the
     * `__landing=N` dirs ARE the landing ids (dynamic overwrite writes
     * one dir per landing; drops remove it), so a driver-side FS listing
@@ -1368,20 +1350,10 @@ object StreamOps {
     * dir is counted only when it holds at least one file — a crash
     * after mkdir but before any data file must not register). */
   private def landingIdsOf(spark: SparkSession, path: String,
-                           before: Long): Array[Long] = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Array.empty
-    else fs.listStatus(hp).flatMap { st =>
-      val nm = st.getPath.getName
-      if (!nm.startsWith("__landing=")) None
-      else {
-        val id = nm.stripPrefix("__landing=").toLong
-        if (id < before && fs.listStatus(st.getPath).exists(_.isFile)) Some(id)
-        else None
-      }
-    }.distinct
-  }
+                           before: Long): Seq[Long] =
+    graft.sinks.PartitionDirs.list(spark, path, "__landing")
+      .filter(d => d.value.toLong < before && d.files.nonEmpty)
+      .map(_.value.toLong)
 
   /** Latest-op-wins LIVE vector view over an [[annIndexTick]] store:
     * per vec_id, the newest event among vector landings and delete
@@ -1442,11 +1414,6 @@ object StreamOps {
   private[graft] def annIndexReportWith(spark: SparkSession, storePath: String,
                                         beforeLanding: Long,
                                         liveVectors: DataFrame): DataFrame = {
-    val edgesPath = s"$storePath/edges"
-    require(pathExists(spark, edgesPath),
-      s"ANN index store at $storePath has no edges store — a first tick " +
-        "landed vectors without building edges (crash between landings); " +
-        "re-run that tick before reading the index")
     val live = (if (liveVectors != null) liveVectors
       else annLiveVectors(spark, storePath, beforeLanding))
       .select(col("vec_id").as("src"))
@@ -1564,20 +1531,17 @@ object StreamOps {
     import graft.ops.SimOps
     import graft.sinks.SketchStore.land
     val vecsPath = s"$storePath/vectors"
-    val edgesPath = s"$storePath/edges"
     // Lands are PURE SINKS within a tick: every view the tick reads is
     // bounded to landings STRICTLY BEFORE its own, so no compute below
     // depends on a land having happened. They therefore run on ONE
-    // background thread — serialized with each other (the dynamic-
-    // overwrite session conf is never touched by two writes at once)
-    // but OVERLAPPED with the tick's dominant compute, the
-    // delete/insert delta search (guide §2.6: independent jobs
+    // background thread, OVERLAPPED with the tick's dominant compute,
+    // the delete/insert delta search (guide §2.6: independent jobs
     // back-fill idle executors; round-18 TickProbe measured the 4–5
-    // lands at ~half the warm tick wall). FIFO submission order
-    // (deletes → vectors → asg → edges → manifest) preserves the
-    // manifest-lands-LAST crash contract exactly; the tick returns
-    // only after the queue drains, so later ticks (and the scoped
-    // checkpoint frees) never see a land in flight.
+    // lands at ~half the warm tick wall). One thread, not a pool, so
+    // that FIFO submission order (deletes → vectors → asg → edges →
+    // manifest) keeps the manifest-lands-LAST crash contract; the tick
+    // returns only after the queue drains, so later ticks (and the
+    // scoped checkpoint frees) never see a land in flight.
     val lander = java.util.concurrent.Executors.newSingleThreadExecutor()
     val landFutures = scala.collection.mutable.ArrayBuffer
       .empty[java.util.concurrent.Future[Unit]]
@@ -1807,9 +1771,7 @@ object StreamOps {
       else mergedAsg(spark, storePath, upTo)
         .join(live.select("vec_id"), Seq("vec_id"), "left_semi"), eager = true)
     // the three baseline frames are eagerly checkpointed above, so the
-    // lands are independent sinks — run them concurrently (guide §2.6;
-    // landMany pins dynamic overwrite for the whole group, so the
-    // concurrent writes cannot race the conf restore)
+    // lands are independent sinks — run them concurrently (guide §2.6)
     graft.sinks.AnnStore.landMany(spark, storePath, base, Seq(
       ("vectors", live, "vec_id"),
       ("edges", edges, "src"),
@@ -1822,18 +1784,7 @@ object StreamOps {
     graft.sinks.AnnStore.dropLandings(spark, storePath, "edges", base)
     graft.sinks.AnnStore.dropLandings(spark, storePath, "asg", base)
     graft.sinks.AnnStore.dropLandings(spark, storePath, "deletes", upTo)
-    // ticks is a plain (unbucketed) landing store — drop by dir
-    locally {
-      val dir = new org.apache.hadoop.fs.Path(s"$storePath/ticks")
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("__landing=") &&
-            nm.stripPrefix("__landing=").toLong < base) {
-          fs.delete(st.getPath, true); ()
-        }
-      }
-    }
+    graft.sinks.PartitionDirs.drop(spark, s"$storePath/ticks", "__landing")(_.toLong < base)
   }
 
   /** The s26 incremental graph insert run CONTINUOUSLY: every
@@ -2246,13 +2197,7 @@ object StreamOps {
     * batch_id partitions written with DYNAMIC overwrite, and the
     * history read prunes batch_id < current — a replayed batch
     * overwrites its own partitions and cannot see its own earlier
-    * partial write. A legacy store (raw-doc rows, no batch_id) is
-    * migrated in place: signatures are computed from its text ONCE
-    * into a batch_id=-1 partition. A legacy VERDICT sink (flat
-    * appended files with batch_id as a data column, the
-    * pre-idempotent layout) is likewise rewritten once into batch_id
-    * partitions — flat files and partition directories cannot coexist
-    * under one reader. Proven in Round9Spec: a doc seen
+    * partial write. Proven in Round9Spec: a doc seen
     * in micro-batch 1 flags its copy in micro-batch 2 as exact, a
     * near-copy as near.
     *
@@ -2271,42 +2216,15 @@ object StreamOps {
             .sigsOf(batch, idCol, textCol, shingleN, k)
             .localCheckpoint(eager = true)
           try {
-            val histSchema =
-              try Some(spark.read.parquet(historyPath).schema)
-              catch { case _: org.apache.spark.sql.AnalysisException => None }
-            if (histSchema.exists(sc => !sc.fieldNames.contains("batch_id"))) {
-              // legacy raw-doc store: sign it once into batch_id=-1
-              // (strictly before any replayable batch)
-              val legacy = graft.ops.DedupOps
-                .sigsOf(spark.read.parquet(historyPath), idCol, textCol, shingleN, k)
-                .withColumn("batch_id", lit(-1L))
-                .localCheckpoint(eager = true)
-              try legacy.write.mode("overwrite")
-                .partitionBy("batch_id").parquet(historyPath)
-              finally graft.Checkpoints.free(legacy)
-            }
+            val histExists =
+              try { spark.read.parquet(historyPath).schema; true }
+              catch { case _: org.apache.spark.sql.AnalysisException => false }
             val hist =
-              if (histSchema.isDefined)
+              if (histExists)
                 spark.read.parquet(historyPath)
                   .filter(col("batch_id") < lit(batchId))
                   .select(col("doc_id"), col("__m"), col("sig"))
               else bs.filter(lit(false))
-            // legacy flat verdict sink (appended files, batch_id as a
-            // data column): rewrite ONCE as batch_id partitions —
-            // readers cannot mix the flat files with the partition
-            // dirs this loop writes
-            val vRoot = new org.apache.hadoop.fs.Path(verdictPath)
-            val vfs = vRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (vfs.exists(vRoot) && vfs.listStatus(vRoot)
-                .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))) {
-              val flat = spark.read.parquet(verdictPath)
-              val legacyV = (if (flat.columns.contains("batch_id")) flat
-                             else flat.withColumn("batch_id", lit(-1L)))
-                .localCheckpoint(eager = true)
-              try legacyV.write.mode("overwrite")
-                .partitionBy("batch_id").parquet(verdictPath)
-              finally graft.Checkpoints.free(legacyV)
-            }
             graft.ops.DedupOps
               .incrementalDedupProbeOf(hist, bs, k, bands, threshold)
               .withColumn("batch_id", lit(batchId))
@@ -2455,14 +2373,7 @@ object StreamOps {
     def storeSlice(): Option[org.apache.spark.sql.DataFrame] =
       graft.sinks.MergeWriter.prunedRead(spark, storePath, "symbol", deltaSyms)
         .map(_.withColumn("symbol", col("symbol").cast("string")))
-    val storeExists = {
-      val root = new org.apache.hadoop.fs.Path(storePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(root) &&
-        fs.listStatus(root).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("symbol="))
-    }
-    if (!storeExists) {
+    if (graft.sinks.PartitionDirs.list(spark, storePath, "symbol").isEmpty) {
       // overwrite, not ErrorIfExists: a batch-0 retry after a
       // partial write (only _temporary left behind) must be
       // self-healing, not permanently wedge the stream
@@ -2517,16 +2428,8 @@ object StreamOps {
       // partition under dynamic overwrite — drop it explicitly
       // (bounded by the delta's symbol count, like the merge)
       val stale = deltaSyms.filterNot(present).toSet
-      if (stale.nonEmpty) {
-        val root = new org.apache.hadoop.fs.Path(candPath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root))
-          fs.listStatus(root)
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("symbol="))
-            .filter(st => stale.contains(java.net.URLDecoder
-              .decode(st.getPath.getName.drop("symbol=".length), "UTF-8")))
-            .foreach(st => fs.delete(st.getPath, true))
-      }
+      if (stale.nonEmpty)
+        graft.sinks.PartitionDirs.drop(spark, candPath, "symbol")(stale)
       // ---- stage 4: global cut from the bounded candidate table ----
       val stored =
         try Some(spark.read.parquet(candPath)
@@ -2564,14 +2467,7 @@ object StreamOps {
     * the checkpoint commit) replays the batch against exactly the
     * history it saw the first time and overwrites its own partitions
     * — no duplicate novelty rows, no self-contaminated history.
-    *
-    * Upgrading from the pre-idempotent (flat, batch_id-less) layout:
-    * a legacy gram store is detected by schema and backfilled once
-    * into a `batch_id=-1` partition before first use. A legacy
-    * NOVELTY sink is never read by this pipeline, but its flat files
-    * cannot coexist with the new partition directories for readers —
-    * point `noveltyPath` at a fresh path (or migrate it the same way)
-    * when upgrading.
+
     *
     * @return the started query; callers own its lifecycle. */
   def streamingNgramNovelty(spark: SparkSession, docs: DataFrame,
@@ -2593,26 +2489,9 @@ object StreamOps {
             .distinct()
             .localCheckpoint(eager = true)
           try {
-            val histSchema =
-              try Some(spark.read.parquet(gramStorePath).schema)
-              catch { case _: org.apache.spark.sql.AnalysisException => None }
-            // Legacy store migration: a gram store written by the
-            // pre-replay-idempotent version is flat (no batch_id
-            // partition column) and would both break the replay filter
-            // and conflict with the new partition-directory layout.
-            // Backfill it ONCE into a batch_id=-1 partition — every
-            // legacy gram predates any replayable batch, so -1
-            // preserves the "strictly before this batch" semantics.
-            if (histSchema.exists(s => !s.fieldNames.contains("batch_id"))) {
-              val legacy = spark.read.parquet(gramStorePath)
-                .select(col("__h")).distinct()
-                .withColumn("batch_id", lit(-1L))
-                .localCheckpoint(eager = true)
-              try legacy.write.mode("overwrite")
-                .partitionBy("batch_id").parquet(gramStorePath)
-              finally graft.Checkpoints.free(legacy)
-            }
-            val histExists = histSchema.isDefined
+            val histExists =
+              try { spark.read.parquet(gramStorePath).schema; true }
+              catch { case _: org.apache.spark.sql.AnalysisException => false }
             val hist =
               if (histExists)
                 // batch_id is the partition column: on replay this

@@ -79,6 +79,27 @@ class MergeWriterSpec extends SparkSpec {
     assert(MergeWriter.compact(spark, dir, "day", maxFiles = 4).isEmpty)
   }
 
+  test("compact decodes partition values exactly: '+' (which Spark leaves " +
+    "unescaped in the directory name) and '/' (which it escapes) both compact") {
+    val dir = Files.createTempDirectory("graft_compact_esc").toString + "/t"
+    val symbols = Seq("1000SHIB+", "BTC/USDT")
+    for (sym <- symbols; i <- 1 to 6)
+      Seq(Kline(sym, "d1", i.toLong, i.toDouble)).toDS().coalesce(1)
+        .write.mode("append").partitionBy("symbol").parquet(dir)
+    def files(sym: String): Int = new java.io.File(s"$dir/symbol=" +
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(sym))
+      .listFiles.count(_.getName.endsWith(".parquet"))
+    assert(symbols.forall(files(_) == 6), "six appends fragment each partition")
+    def rows = spark.read.parquet(dir).select("symbol", "day", "ts", "close")
+      .as[Kline].collect().toSet
+    val before = rows
+
+    val rewritten = MergeWriter.compact(spark, dir, "symbol", maxFiles = 4)
+    assert(rewritten.toSet == symbols.toSet, s"both partitions rewrite: $rewritten")
+    assert(symbols.forall(files(_) == 1), s"coalesced: ${symbols.map(files)}")
+    assert(rows == before, "compaction is a pure physical rewrite")
+  }
+
   test("merge is idempotent (same delta twice == once)") {
     val dir = Files.createTempDirectory("graft_merge2").toString + "/t"
     Seq(Kline("BTC", "d1", 1, 1.0)).toDS().write.partitionBy("day").parquet(dir)

@@ -3,13 +3,11 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Round-13 contract pins: the legacy (pre-batch_id) gram-store
-  * migration path of streamingNgramNovelty. A store written by the
-  * old flat-append layout has no batch_id column and no partition
-  * directories; the first post-upgrade batch must (a) not throw,
-  * (b) treat every legacy gram as history (backfilled into
-  * batch_id=-1, strictly before any replayable batch), and (c) leave
-  * the store in the new partitioned layout. */
+/** Round-13 contract pins: st07 native session windows (stream ==
+  * batch, the exact-gap rule), s22 MMR diversity, m10 signal quality,
+  * t23 perplexity buckets, s23 PQ refine recall, the q96–q99 risk
+  * statistics on closed-form inputs, and the p06 export pipeline's
+  * stage wiring. */
 class Round13Spec extends SparkSpec {
   import spark.implicits._
 
@@ -135,85 +133,6 @@ class Round13Spec extends SparkSpec {
       val tl = rs.filter(_.getAs[String]("bucket") == "tail").map(_.getAs[Double]("ppl"))
       if (hd.nonEmpty && tl.nonEmpty)
         assert(hd.max <= tl.min, s"$lang: head max ${hd.max} > tail min ${tl.min}")
-    }
-  }
-
-  test("streamingNgramNovelty migrates a legacy flat gram store in place") {
-    val base = java.nio.file.Files.createTempDirectory("graft_legacy_").toString
-    try {
-      new java.io.File(s"$base/landing").mkdirs()
-      // the same 8-gram + hash pipeline the operator runs, minus batch_id:
-      // doc -1's grams land in the store the OLD layout way (flat files)
-      val seen = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-      Seq(-1L -> seen).toDF("doc_id", "text")
-        .select(F.words(col("text")).as("__ws"))
-        .select(explode(expr(
-          "transform(sequence(0, size(__ws)-8), i -> array_join(slice(__ws, i+1, 8), ' '))")).as("__g"))
-        .select(F.hash60(col("__g")).as("__h")).distinct()
-        .write.mode("overwrite").parquet(s"$base/grams") // FLAT: no batch_id
-      assert(!spark.read.parquet(s"$base/grams").columns.contains("batch_id"))
-      // first post-upgrade batch: one doc REPEATING the legacy text
-      // (novelty must be 0 — history seen), one fresh doc (novelty 1)
-      Seq((1L, seen), (2L, "one two three four five six seven eight nine ten"))
-        .toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").json(s"$base/landing")
-      val stream = spark.readStream.schema("doc_id LONG, text STRING")
-        .json(s"$base/landing")
-      val q = streaming.StreamOps.streamingNgramNovelty(spark, stream,
-        s"$base/grams", s"$base/novelty", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      val out = spark.read.parquet(s"$base/novelty")
-        .select("doc_id", "novelty").as[(Long, Double)].collect().toMap
-      assert(out(1L) == 0.0, s"legacy grams must count as history, got novelty ${out(1L)}")
-      assert(out(2L) == 1.0, s"fresh doc must be fully novel, got ${out(2L)}")
-      // the store is now partitioned: legacy rows under batch_id=-1
-      val store = spark.read.parquet(s"$base/grams")
-      assert(store.columns.contains("batch_id"), "store must be in the new layout")
-      assert(store.filter(col("batch_id") === -1L).count() > 0L,
-        "legacy grams must live in the batch_id=-1 partition")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(base))
-    }
-  }
-
-  test("streamingIncrementalDedup migrates a legacy raw-doc history store in place") {
-    implicit val sql = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.{DocEvent, StreamOps}
-    val base = java.nio.file.Files.createTempDirectory("incdedup_legacy").toFile.getAbsolutePath
-    try {
-      // legacy layout: raw (doc_id, text) rows, flat, no batch_id
-      Seq(DocEvent(1L, "alpha beta gamma delta epsilon zeta"),
-          DocEvent(2L, "totally different words here entirely"))
-        .toDF().write.parquet(s"$base/history")
-      val input = MemoryStream[DocEvent]
-      val q = StreamOps.streamingIncrementalDedup(spark, input.toDF(),
-        s"$base/history", s"$base/verdicts", s"$base/ckpt", threshold = 0.25)
-      try {
-        input.addData(
-          DocEvent(10L, "ALPHA beta gamma delta epsilon zeta"), // exact vs legacy 1
-          DocEvent(11L, "totally different words here friend"), // near vs legacy 2
-          DocEvent(12L, "completely novel content nobody wrote"))
-        q.processAllAvailable()
-        val v = spark.read.parquet(s"$base/verdicts")
-          .collect().map(r => r.getLong(0) -> (r.getString(1), r.get(2))).toMap
-        assert(v(10L) == (("exact", 1L)), s"legacy doc must exact-match: $v")
-        assert(v(11L)._1 == "near" && v(12L)._1 == "new", s"got $v")
-        // store is now the partitioned SIG layout: legacy in batch_id=-1
-        val store = spark.read.parquet(s"$base/history")
-        assert(store.schema.fieldNames.contains("sig"))
-        val byBatch = store.groupBy("batch_id").count().collect()
-          .map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
-        assert(byBatch(-1L) == 2L && byBatch(0L) == 3L, s"got $byBatch")
-      } finally q.stop()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(base))
     }
   }
 

@@ -394,43 +394,6 @@ class Round14Spec extends SparkSpec {
       s"hierarchical assignment recall $hierRecall must hold against brute $bruteRecall")
   }
 
-  test("streamingIncrementalDedup migrates a legacy FLAT verdict sink into batch_id partitions") {
-    implicit val sql = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.{DocEvent, StreamOps}
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("incdedup_vleg").toFile.getAbsolutePath
-    try {
-      // pre-idempotent layout: verdicts appended FLAT, batch_id as a
-      // data column — cannot coexist with partition dirs for readers
-      Seq((100L, "exact", 1L, 1.0, 7L), (101L, "new", -1L, 0.0, 8L))
-        .toDF("doc_id", "status", "match_id", "est_sim", "batch_id")
-        .write.parquet(s"$base/verdicts")
-      val input = MemoryStream[DocEvent]
-      val q = StreamOps.streamingIncrementalDedup(spark, input.toDF(),
-        s"$base/history", s"$base/verdicts", s"$base/ckpt")
-      try {
-        input.addData(DocEvent(10L, "some fresh words never seen before"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val root = new java.io.File(s"$base/verdicts")
-      assert(!root.listFiles().exists(f => f.isFile && f.getName.endsWith(".parquet")),
-        "no flat parquet files may remain at the sink root after migration")
-      assert(root.listFiles().exists(f => f.isDirectory && f.getName == "batch_id=7"),
-        "legacy rows must keep their original batch_id as the partition")
-      val v = spark.read.parquet(s"$base/verdicts")
-      assert(v.count() == 3, "both legacy rows plus the new tick's verdict")
-      assert(v.filter(col("doc_id") === 100L).select("status").head().getString(0) == "exact",
-        "legacy verdict values must survive the rewrite")
-      assert(v.filter(col("doc_id") === 10L).select("status").head().getString(0) == "new")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(base))
-    }
-  }
-
   // ------------------------------------------------- st11 Page CUSUM
 
   private def cusumTs(i: Int) = new java.sql.Timestamp(1700000000000L + i * 60000L)
